@@ -183,6 +183,8 @@ def main() -> int:
         print(f"engine package not found at {PACKAGE}", file=sys.stderr)
         return 2
 
+    # a terminated launcher still stops the worker's session (finally)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(1))
     env = bench_env()
     build_native(env)
     if args.workload != "all":

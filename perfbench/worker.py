@@ -235,7 +235,7 @@ WORKLOADS = {
 SETUP_ROUNDS = 3
 # a run's median needs this many warm joins even when they overrun
 # --seconds (a join takes 3.5-4 s, or twice that on a busy machine)
-MIN_TIMED_JOINS = 3
+MIN_TIMED_JOINS = 2
 
 
 # -------------------------------------------------------------- helpers
