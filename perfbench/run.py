@@ -34,16 +34,14 @@ WORKLOADS = ("ann_lev_1b", "batch_multi")
 
 # The driver JVM heap. The session's 12g default pins -Xms to it, which
 # leaves a 15 GB machine little room for the Python workers; 2g holds
-# every workload here. The young generation is fixed (-Xmn below) so
-# the JVM's resident size does not depend on G1's adaptive sizing: with
-# it adaptive, peak RSS on ann_lev_1b varied by 20% between runs.
+# every workload here. Other JVM settings are the session's own.
 DRIVER_MEM = "2g"
 # Worker wall-clock limit; the launcher exits within 180 s of start.
 WORKER_TIMEOUT_S = 170
 
 SPARK_DEFAULTS = """\
 spark.ui.showConsoleProgress false
-spark.driver.defaultJavaOptions -Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xmn512m
+spark.driver.defaultJavaOptions -Djava.io.tmpdir={tmp} -XX:-UsePerfData
 spark.sql.warehouse.dir {work}/warehouse
 """
 

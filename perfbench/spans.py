@@ -183,12 +183,22 @@ class SparkStatus:
     Works with the UI disabled. Job ids are sequential within a
     session, so the jobs of one join are the ids between two reads of
     the newest id. Scala ``Seq`` results are indexed with ``apply``;
-    ``lastStageAttempt`` gives per-stage task metrics."""
+    ``lastStageAttempt`` gives per-stage task metrics. The driver JVM's
+    JIT compile time, which the status store does not hold, is read from
+    its compilation MXBean."""
 
     def __init__(self, spark) -> None:
         self._jsc = spark.sparkContext._jsc.sc()
         self._store = self._jsc.statusStore()
         self._tracker = spark.sparkContext.statusTracker()
+        self._compiler = (
+            spark._jvm.java.lang.management.ManagementFactory
+            .getCompilationMXBean()
+        )
+
+    def jit_s(self) -> float:
+        """Seconds the JVM's JIT compilers have spent since it started."""
+        return self._compiler.getTotalCompilationTime() / 1e3
 
     def settle(self) -> None:
         """Wait until the listener bus has delivered every event, so the

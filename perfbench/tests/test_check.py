@@ -23,7 +23,7 @@ from worker import BatchWorkload, PairWorkload  # noqa: E402
 
 
 def _pair_workload():
-    w = PairWorkload(n_left=60, n_right=40, threshold=75, lossless=True)
+    w = PairWorkload(n_left=60, n_right=40, threshold=75)
     w.data = gen.pair_inputs(11, w.n_left, w.n_right)
     return w
 
@@ -49,7 +49,7 @@ def test_pair_check_accepts_the_true_output():
     assert found == planted == 20
 
 
-@pytest.mark.parametrize("mutation", ["score", "payload", "drop", "duplicate"])
+@pytest.mark.parametrize("mutation", ["score", "payload", "duplicate"])
 def test_pair_check_rejects_a_broken_output(mutation):
     w = _pair_workload()
     rows = _true_pair_rows(w)
@@ -58,17 +58,14 @@ def test_pair_check_rejects_a_broken_output(mutation):
         planted["l_name_vs_r_name_levenshtein"] -= 0.01
     elif mutation == "payload":
         planted["r_name"] = planted["r_name"] + "x"
-    elif mutation == "drop":
-        rows.remove(planted)
     else:
         rows.append(dict(planted))
     errors, _, _ = w.check(rows, 0)
     assert errors
 
 
-def test_approximate_path_reports_recall_without_failing():
+def test_pair_check_reports_recall_without_failing():
     w = _pair_workload()
-    w.lossless = False
     rows = [r for r in _true_pair_rows(w) if (r["l_id"], r["r_id"]) in w.data.planted]
     errors, found, planted = w.check(rows[:-5], 0)
     assert errors == []
@@ -107,15 +104,33 @@ def _true_batch_rows(w):
     return rows
 
 
-def test_batch_check_accepts_the_true_output_and_rejects_a_lost_row():
+def test_batch_check_accepts_the_true_output():
     w = _batch_workload()
-    rows = _true_batch_rows(w)
-    errors, found, planted = w.check(rows, 0)
+    errors, found, planted = w.check(_true_batch_rows(w), 0)
     assert errors == []
     assert found == planted == 15
+
+
+@pytest.mark.parametrize(
+    "mutation, error",
+    [
+        ("lost", "missing"),
+        ("duplicate matched", "duplicate"),
+        ("duplicate unmatched", "duplicate"),
+    ],
+)
+def test_batch_check_rejects_a_broken_output(mutation, error):
+    w = _batch_workload()
+    rows = _true_batch_rows(w)
     unmatched = next(r for r in rows if r["ref_id"] is None)
-    errors, _, _ = w.check([r for r in rows if r is not unmatched], 0)
-    assert any("missing" in e for e in errors)
+    if mutation == "lost":
+        rows.remove(unmatched)
+    elif mutation == "duplicate matched":
+        rows.append(dict(next(r for r in rows if r["ref_id"] is not None)))
+    else:
+        rows.append(dict(unmatched))
+    errors, _, _ = w.check(rows, 0)
+    assert any(error in e for e in errors)
 
 
 def _span(i, layer, start, end, parent=None):
