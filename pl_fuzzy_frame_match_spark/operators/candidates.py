@@ -587,6 +587,44 @@ def _swar_popcount(x):
 # exactly the BROADCAST_KEY_LIMIT guarantee (2^21 = ~2.1M right keys)
 _RANK_BITS = 21
 
+
+def _hamming_topn_chunks(
+    lv, rv, max_hamming: int, top_n: int, probe_chunk: int
+):
+    """The numpy sketch-scan kernel: each ``probe_chunk`` slice of the
+    left sketches ``lv`` XORs against every right sketch ``rv``, SWAR
+    popcounts, applies the hamming cap, then keeps each left row's
+    top-N by ``(hamming << _RANK_BITS | column)``. Yields
+    ``(c0, rows, cols, h)`` for every chunk with survivors:
+    ``c0 + rows`` index ``lv``, ``cols`` index ``rv``, ``h`` is the
+    uint32 hamming distance. With ``rv`` sorted by key the column IS
+    the key rank, so ties break by key — a total, deterministic order."""
+    import numpy as np
+
+    for c0 in range(0, len(lv), probe_chunk):
+        lc = lv[c0 : c0 + probe_chunk]
+        ham = _swar_popcount(lc[:, None] ^ rv[None, :])
+        # hamming cap first: with a realistic cap (2 sigma below the
+        # random-pair mean) ~97% of the chunk dies here, so the top-N
+        # selection runs on the tiny survivor set instead of an
+        # argpartition over the full chunk matrix (which dominated the
+        # scan at wide right sides)
+        rows, cols = np.nonzero(ham <= max_hamming)
+        if not len(rows):
+            continue
+        h = ham[rows, cols].astype(np.uint32)
+        if np.bincount(rows).max() > top_n:
+            comb = (h << np.uint32(_RANK_BITS)) | cols.astype(np.uint32)
+            order = np.lexsort((comb, rows))
+            rows, cols, h = rows[order], cols[order], h[order]
+            starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+            sizes = np.diff(np.r_[starts, len(rows)])
+            pos = np.arange(len(rows)) - np.repeat(starts, sizes)
+            keep = pos < top_n
+            rows, cols, h = rows[keep], cols[keep], h[keep]
+        yield c0, rows, cols, h
+
+
 # Per-task pair budget for the C sketch scan — distinct from the
 # Catalyst/pandas-kernel PAIRS_PER_TASK (250K): the native XOR +
 # SWAR-popcount + fused-rescore kernel sustains ~1.6e8 pairs/s/core,
@@ -777,35 +815,9 @@ def _sketch_scan_topn(
                 continue
             lk = pdf[left_col].to_numpy()
             lv = simhash_sketch_np(lk)
-            llow = None
-            for c0 in range(0, len(lv), probe_chunk):
-                lc = lv[c0 : c0 + probe_chunk]
-                ham = _swar_popcount(lc[:, None] ^ rv[None, :])
-                # hamming cap first: with a realistic cap (2 sigma below
-                # the random-pair mean) ~97% of the chunk dies here, so
-                # the top-N selection runs on the tiny survivor set
-                # instead of an argpartition over the full chunk matrix
-                # (which dominated the scan at wide right sides)
-                rows, cols = np.nonzero(ham <= max_hamming)
-                if not len(rows):
-                    continue
-                h = ham[rows, cols].astype(np.uint32)
-                if np.bincount(rows).max() > top_n:
-                    # column index IS the key rank (rv is key-sorted),
-                    # so (hamming << RANK_BITS | col) is the same total,
-                    # deterministic order the argpartition path used
-                    comb = (h << np.uint32(_RANK_BITS)) | cols.astype(
-                        np.uint32
-                    )
-                    order = np.lexsort((comb, rows))
-                    rows, cols, h = rows[order], cols[order], h[order]
-                    starts = np.flatnonzero(
-                        np.r_[True, rows[1:] != rows[:-1]]
-                    )
-                    sizes = np.diff(np.r_[starts, len(rows)])
-                    pos = np.arange(len(rows)) - np.repeat(starts, sizes)
-                    keep = pos < top_n
-                    rows, cols, h = rows[keep], cols[keep], h[keep]
+            for c0, rows, cols, h in _hamming_topn_chunks(
+                lv, rv, max_hamming, top_n, probe_chunk
+            ):
                 yield pd.DataFrame(
                     {
                         left_col: lk[c0 + rows],
@@ -963,26 +975,9 @@ def _sketch_scan_topn_blocked(
                 if m == 0 or len(lk) == 0:
                     continue
                 lv = simhash_sketch_np(lk)
-                for c0 in range(0, len(lv), probe_chunk):
-                    lc = lv[c0 : c0 + probe_chunk]
-                    ham = _swar_popcount(lc[:, None] ^ rv[None, :])
-                    rows, cols = np.nonzero(ham <= max_hamming)
-                    if not len(rows):
-                        continue
-                    h = ham[rows, cols].astype(np.uint32)
-                    if np.bincount(rows).max() > top_n:
-                        comb = (h << np.uint32(_RANK_BITS)) | cols.astype(
-                            np.uint32
-                        )
-                        order = np.lexsort((comb, rows))
-                        rows, cols, h = rows[order], cols[order], h[order]
-                        starts = np.flatnonzero(
-                            np.r_[True, rows[1:] != rows[:-1]]
-                        )
-                        sizes = np.diff(np.r_[starts, len(rows)])
-                        pos = np.arange(len(rows)) - np.repeat(starts, sizes)
-                        keep = pos < top_n
-                        rows, cols, h = rows[keep], cols[keep], h[keep]
+                for c0, rows, cols, h in _hamming_topn_chunks(
+                    lv, rv, max_hamming, top_n, probe_chunk
+                ):
                     yield pd.DataFrame(
                         {
                             left_col: lk[c0 + rows],

@@ -870,6 +870,9 @@ def skipgram_pairs_from_paths(
             ),
         )
     )
+    # empty / null paths yield no pairs: sequence(0, size - 1) would
+    # count DOWN to [0, -1] there, and element_at(path, 0) raises
+    pairs_arr = F.when(sz > 0, pairs_arr)
     return (
         paths.select(F.explode(pairs_arr).alias("__pr"))
         .select(F.col("__pr.center").alias("center"),

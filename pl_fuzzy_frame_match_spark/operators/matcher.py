@@ -6,9 +6,11 @@ Capability parity with the reference's pipeline
   PHASE A  plan: counts, approx-distinct selectivity, mapping order,
            low-uniqueness input dedup, collision renames, output order
   PHASE B  row identity: __left_index / __right_index
-  PHASE C  per-mapping loop: key dedup (group->index list) -> adaptive
-           candidate generation (exact cross join | LSH approx) ->
-           score on DISTINCT key pairs -> threshold filter -> explode
+  PHASE C  per-mapping loop. Round 1: key dedup (group->index list)
+           -> adaptive candidate generation (exact cross join | LSH
+           approx) -> score on DISTINCT key pairs -> threshold filter
+           -> explode. Rounds 2..n: score each surviving ROW pair on
+           the next mapping -> threshold filter
   PHASE D  conjunction of all mappings + payload re-attach
 
 Spark-first deviations from the reference (same *semantics*, different
@@ -17,10 +19,11 @@ machinery — documented per the survey's guidance):
 - Row ids come from ``monotonically_increasing_id`` + an immediate
   ``localCheckpoint`` (ids must not change across re-evaluation; the
   reference pins them by spilling to Arrow IPC, matcher.py:416).
-- Refinement rounds 2..n carry score columns forward through a single
-  join per round instead of materializing per-round frames and
-  re-intersecting them at the end (reference ``combine_matches``,
-  matcher.py:388-392) — one shuffle per mapping instead of two.
+- Refinement rounds 2..n score the surviving row pairs directly and
+  carry score columns forward, instead of regrouping on distinct value
+  pairs, materializing per-round frames and re-intersecting them at
+  the end (reference ``combine_matches``, matcher.py:388-392) — no
+  eager checkpoint and no join back, so each round's work runs once.
 - The reference's explicit spill-to-temp-dir machinery (_utils.py) and
   manual chunking/partitioned-dedup (matcher.py:52-96, 343-385)
   dissolve into Spark's native shuffle spill / partitioning.
@@ -84,17 +87,6 @@ RIGHT_INDEX = "__right_index"
 _DIST = "__fuzzy_dist"
 _SCORE = "__fuzzy_score"
 
-# Refine rounds score far fewer pairs per task than the cross-join
-# tier (PAIRS_PER_TASK): the surviving pair set is usually small, and
-# one coalesced partition serializes the kernel — spread it thinner.
-REFINE_PAIRS_PER_TASK = 20_000
-
-# Above this uniqueness ratio on BOTH refine columns, the distinct
-# value-pair frame would be ~the row-level pair frame, so refine
-# scores rows directly (no distinct, no join-back, no eager
-# checkpoint — the round stays one lazy plan).
-REFINE_DIRECT_UNIQUENESS = 0.8
-
 # Broadcast an indexed input frame into pair-level joins when its row
 # count (known exactly from the planner pass) is below this. The frames
 # sit behind checkpoints, so AQE has no stats and would otherwise
@@ -135,40 +127,17 @@ def build_key_frame(df: DataFrame, col: str, index_col: str) -> DataFrame:
 _LC_PREFIX = "__lc_"
 
 
-def score_and_explode(
-    candidates: DataFrame, mapping: FuzzyMapping
-) -> DataFrame:
-    """C5: lowercase -> normalized distance -> threshold filter ->
-    similarity flip -> double explode of the index lists
-    (reference process.py:8-56, 114-155). Returns
-    (__left_index, __right_index, <score col>).
-
-    When the candidate frame carries pre-lowered key columns
-    (``__lc_<col>``, added per DISTINCT key before the cross join),
-    scoring uses them: a ``lower()`` above the join is re-evaluated
-    per PAIR in whole-stage codegen (2 string allocations x pair
-    volume — measured ~15% of the 80M-pair exact path), below the
-    join it runs once per key row / once at broadcast build."""
-    la, lb = _LC_PREFIX + mapping.left_col, _LC_PREFIX + mapping.right_col
-    a = F.col(la) if la in candidates.columns else F.lower(
-        F.col(mapping.left_col)
-    )
-    b = F.col(lb) if lb in candidates.columns else F.lower(
-        F.col(mapping.right_col)
-    )
-    d = distance_column(
-        mapping.fuzzy_type, a, b, mapping.reversed_threshold_score
-    )
+def _explode_scored(scored: DataFrame, output_col: str) -> DataFrame:
+    """A2: un-dedup a thresholded key-pair frame — ``(__fuzzy_score,
+    __left_index list, __right_index list)`` in, one
+    ``(__left_index, __right_index, <output_col>)`` row per index pair
+    out (reference process.py:114-155). Every caller filters on the
+    threshold first, so only surviving key pairs expand."""
     return (
-        candidates.withColumn(_DIST, d)
-        .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-        .withColumn(_SCORE, F.lit(1.0) - F.col(_DIST))
-        .select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
+        scored.select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
         .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
         .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-        .select(
-            LEFT_INDEX, RIGHT_INDEX, F.col(_SCORE).alias(mapping.output_column_name)
-        )
+        .select(LEFT_INDEX, RIGHT_INDEX, F.col(_SCORE).alias(output_col))
     )
 
 
@@ -212,11 +181,8 @@ def first_round_matches(
             on=eq,
             how="inner",
         )
-        return (
-            joined.select(LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .withColumn(mapping.output_column_name, F.lit(1.0))
+        return _explode_scored(
+            joined.withColumn(_SCORE, F.lit(1.0)), mapping.output_column_name
         )
     from .candidates import SKETCH_SCAN_CAP
 
@@ -281,16 +247,7 @@ def first_round_matches(
             scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
             n_left_keys, n_right_keys,
         )
-        return (
-            survivors.select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .select(
-                LEFT_INDEX,
-                RIGHT_INDEX,
-                F.col(_SCORE).alias(mapping.output_column_name),
-            )
-        )
+        return _explode_scored(survivors, mapping.output_column_name)
     strategy = choose_candidate_strategy(
         n_left_keys, n_right_keys, use_appr_nearest_neighbor, cross_over
     )
@@ -323,31 +280,30 @@ def first_round_matches(
             scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
             n_left_keys, n_right_keys,
         )
-        pairs = (
-            survivors.select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .select(
-                LEFT_INDEX,
-                RIGHT_INDEX,
-                F.col(_SCORE).alias(mapping.output_column_name),
-            )
-        )
     else:
+        # J1 + C5: the cartesian carries the index lists through, and
+        # scoring reads the ``__lc_<col>`` keys lowered once per
+        # DISTINCT key below the join: a ``lower()`` above it is
+        # re-evaluated per PAIR in whole-stage codegen (2 string
+        # allocations x pair volume — measured ~15% of the 80M-pair
+        # exact path)
+        la, lb = _LC_PREFIX + mapping.left_col, _LC_PREFIX + mapping.right_col
         cands = exact_candidates(
-            left_keys.withColumn(
-                _LC_PREFIX + mapping.left_col,
-                F.lower(F.col(mapping.left_col)),
-            ),
-            right_keys.withColumn(
-                _LC_PREFIX + mapping.right_col,
-                F.lower(F.col(mapping.right_col)),
-            ),
+            left_keys.withColumn(la, F.lower(F.col(mapping.left_col))),
+            right_keys.withColumn(lb, F.lower(F.col(mapping.right_col))),
             n_left_keys,
             n_right_keys,
         )
-        pairs = score_and_explode(cands, mapping)
-    return pairs
+        d = distance_column(
+            mapping.fuzzy_type, F.col(la), F.col(lb),
+            mapping.reversed_threshold_score,
+        )
+        survivors = (
+            cands.withColumn(_DIST, d)
+            .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
+            .withColumn(_SCORE, F.lit(1.0) - F.col(_DIST))
+        )
+    return _explode_scored(survivors, mapping.output_column_name)
 
 
 def refine_matches(
@@ -357,25 +313,18 @@ def refine_matches(
     mapping: FuzzyMapping,
     n_left: Optional[int] = None,
     n_right: Optional[int] = None,
-    direct: bool = False,
 ) -> DataFrame:
-    """Rounds 2..n (reference matcher.py:188-238, 456-491): restrict to
-    surviving index pairs, score each DISTINCT (left value, right value)
-    pair once, keep pairs passing this mapping's threshold, carry all
-    prior score columns forward. Conjunction semantics — output can only
+    """Rounds 2..n (reference matcher.py:188-238, 456-491): look up this
+    mapping's values for every surviving index pair, score the pair,
+    keep it if it passes this mapping's threshold, and carry all prior
+    score columns forward. Conjunction semantics — output can only
     shrink (pinned by the reference's monotonicity tests).
 
-    ``existing`` is materialized first (the Spark analogue of the
-    reference's per-round spill, matcher.py:492) — but ONLY on the
-    general path, whose plan references it on two branches
-    (distinct-pair scoring and the row-level probe); without truncation
-    the whole previous round would be recomputed once per branch. The
-    exact-match shortcut below references ``existing`` exactly once,
-    so it skips the checkpoint and the round stays a single lazy plan
-    end-to-end — the prior round's scoring work executes once, in the
-    final job, instead of once into a checkpoint and again out of it
-    (VERDICT r4 #4: this was the fuzzy_join_multi fixed-cost gap; the
-    reference's O8 skipped per-round recounts the same way)."""
+    The reference regroups survivors on DISTINCT value pairs before
+    scoring; here every surviving row pair is scored directly. The plan
+    references ``existing`` once, so the round needs no eager
+    checkpoint to keep the prior round's work from running twice (the
+    reference spills each round instead, matcher.py:492)."""
 
     def _vals(frame: DataFrame) -> DataFrame:
         return (
@@ -400,9 +349,8 @@ def refine_matches(
         )
 
     if mapping.reversed_threshold_score == 0.0:
-        # exact-match shortcut (threshold 100): no distinct-pair frame,
-        # no scoring, no join-back — just the equality filter; single
-        # reference to `existing`, so no checkpoint either
+        # exact-match shortcut (threshold 100): no scoring, just the
+        # equality filter
         return (
             _vals(existing)
             .filter(
@@ -412,64 +360,21 @@ def refine_matches(
             .withColumn(mapping.output_column_name, F.lit(1.0))
             .drop(mapping.left_col, mapping.right_col)
         )
-    if direct:
-        # near-unique refine columns (planner-flagged): the distinct
-        # value-pair frame would be ~the row-level frame, so the
-        # distinct + join-back machinery is pure overhead — score the
-        # rows directly. Single reference to `existing` => the whole
-        # round stays one lazy plan with NO eager checkpoint (the
-        # exact-shortcut insight, extended). The round-robin
-        # repartition + LAZY checkpoint barrier parallelizes the
-        # kernel (AQE coalesces the surviving-pair exchange to ~1
-        # partition otherwise) without a separate blocking job.
-        cores = existing.sparkSession.sparkContext.defaultParallelism
-        la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
-        return (
-            _vals(existing)
-            .repartition(cores * 2)
-            .localCheckpoint(eager=False)
-            .withColumn(la, F.lower(F.col(mapping.left_col)))
-            .withColumn(lb, F.lower(F.col(mapping.right_col)))
-            .withColumn(
-                _DIST,
-                distance_column(
-                    mapping.fuzzy_type,
-                    F.col(la),
-                    F.col(lb),
-                    mapping.reversed_threshold_score,
-                ),
-            )
-            .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-            .withColumn(
-                mapping.output_column_name, F.lit(1.0) - F.col(_DIST)
-            )
-            .drop(la, lb, _DIST, mapping.left_col, mapping.right_col)
-        )
-    existing = existing.localCheckpoint(eager=True)
-    vals = _vals(existing)
-    distinct_pairs = vals.select(mapping.left_col, mapping.right_col).distinct()
-    # Parallelize the refine-round scoring (O10 made this path carry
-    # real fuzzy work): AQE coalesces the small distinct-pair exchange
-    # to ONE partition, serializing the distance kernel (the same
-    # measured gotcha as the dedup verify stages). Repartition by the
-    # surviving-pair volume — the count is free off the checkpoint —
-    # behind a LAZY localCheckpoint barrier so Catalyst cannot sink
-    # the scoring projection below the round-robin exchange back into
-    # the single-partition aggregate stage.
-    n_pairs = existing.count()
+    # The round-robin repartition + LAZY checkpoint barrier parallelizes
+    # the kernel: AQE coalesces the surviving-pair exchange to ~1
+    # partition otherwise, and Catalyst would sink the scoring below the
+    # exchange. Under AQE, building the barrier runs the upstream
+    # shuffle stages (the prior rounds) right here. The lowercased pair is
+    # aliased in a projection: an inline lower() is re-evaluated at every
+    # reference in the distance expression tree (~6x per row under the
+    # banded-levenshtein cap).
     cores = existing.sparkSession.sparkContext.defaultParallelism
-    n_parts = int(min(max(n_pairs // REFINE_PAIRS_PER_TASK, 1), cores * 2))
-    if n_parts > 1:
-        distinct_pairs = distinct_pairs.repartition(n_parts).localCheckpoint(
-            eager=False
-        )
-    # alias the lowercased pair in a projection: an inline lower() is
-    # re-evaluated at every reference in the distance expression tree
-    # (levenshtein args + both lengths + the banded cap — ~6x per row);
-    # the alias binds one codegen variable per row
     la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
-    scored = (
-        distinct_pairs.withColumn(la, F.lower(F.col(mapping.left_col)))
+    return (
+        _vals(existing)
+        .repartition(cores * 2)
+        .localCheckpoint(eager=False)
+        .withColumn(la, F.lower(F.col(mapping.left_col)))
         .withColumn(lb, F.lower(F.col(mapping.right_col)))
         .withColumn(
             _DIST,
@@ -480,16 +385,12 @@ def refine_matches(
                 mapping.reversed_threshold_score,
             ),
         )
-        .drop(la, lb)
         .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-        .withColumn(mapping.output_column_name, F.lit(1.0) - F.col(_DIST))
-        .drop(_DIST)
+        .withColumn(
+            mapping.output_column_name, F.lit(1.0) - F.col(_DIST)
+        )
+        .drop(la, lb, _DIST, mapping.left_col, mapping.right_col)
     )
-    # the distinct-value-pair frame is tiny relative to row-level pairs;
-    # AQE turns this into a broadcast join at runtime when it fits
-    return vals.join(
-        scored, on=[mapping.left_col, mapping.right_col], how="inner"
-    ).drop(mapping.left_col, mapping.right_col)
 
 
 def _empty_result(
@@ -678,20 +579,8 @@ def fuzzy_match_dfs(
             logger.info(
                 "refining matches on %s ~ %s", mapping.left_col, mapping.right_col
             )
-            direct = (
-                left_uniq.get(mapping.left_col, 0)
-                >= REFINE_DIRECT_UNIQUENESS * left_count
-                and right_uniq.get(mapping.right_col, 0)
-                >= REFINE_DIRECT_UNIQUENESS * right_count
-            )
             matches = refine_matches(
-                left_i,
-                right_i,
-                matches,
-                mapping,
-                left_count,
-                right_count,
-                direct=direct,
+                left_i, right_i, matches, mapping, left_count, right_count
             )
 
     # ---- PHASE D: payload re-attach + frozen column order

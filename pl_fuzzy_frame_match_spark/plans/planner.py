@@ -106,17 +106,17 @@ def order_mappings_by_selectivity(
 
 # O10 cap: promote exact (threshold-100) mappings ahead of fuzzy ones
 # only when the estimated equi-join survivor volume is safely
-# materializable — the promoted plan CHECKPOINTS the surviving pair
-# frame before fuzzy refinement, so a non-selective exact key (few
-# distinct values) must not turn the shortcut into a cartesian-sized
-# materialization. 1e8 matches the exact-tier ANN crossover: a
+# scorable — the fuzzy refine round scores every surviving ROW pair
+# (no regrouping on distinct values), so a non-selective exact key
+# (few distinct values) must not turn the shortcut into a
+# cartesian-sized refine. 1e8 matches the exact-tier ANN crossover: a
 # survivor set the refine round can score losslessly is exactly a pair
 # set the first round could have scored losslessly.
 EXACT_FIRST_PAIR_CAP = 100_000_000
 
 # O10 floor (round 8, measured by scripts/probe_o10_scale.py on the
 # two-mapping bench shape, local[32] sf0.1): promotion inserts a full
-# extra round (equi-join + checkpoint + refine join-back) with a fixed
+# extra round (equi-join, then a refine round) with a fixed
 # cost independent of the avoided volume. Warmed, interleaved A/B
 # (per-arm warmup, median of 3 — the probe's first version timed the
 # promoted arm cold and got the 1x sign WRONG by 2.5x): promotion wins
@@ -150,7 +150,7 @@ def promote_exact_mappings(
     Promotion fires only when BOTH hold (round 9, ADVICE r8: every
     term in the benefit test is in DISTINCT-pair units — the units O2
     actually scores in — while the materialization cap stays in ROW
-    units, the units the checkpoint writes):
+    units, the units the refine round scores):
 
     - AVOIDED volume ``fuzzy_pairs - est_survivors >=
       PROMOTE_MIN_FUZZY_PAIRS``: the extra round's ~0.2-0.3 s fixed
@@ -160,7 +160,7 @@ def promote_exact_mappings(
       former at-least-half shrink heuristic;
     - estimated surviving ROWS (row cartesian / max distinct of the
       most selective exact key — uniform-key estimate) fit
-      ``EXACT_FIRST_PAIR_CAP`` (the refine round checkpoints them).
+      ``EXACT_FIRST_PAIR_CAP`` (the refine round scores each one).
 
     The reference's own ordering (O1, process.py uniqueness sort) has
     no exact-mapping special case because its engine scores all rounds
@@ -186,8 +186,8 @@ def promote_exact_mappings(
         )
         for m in exact
     )
-    # materialization guard in ROW units — the promoted plan
-    # checkpoints the surviving ROW pairs of the equi-join
+    # volume guard in ROW units — the refine round scores every
+    # surviving ROW pair of the equi-join
     est_rows = cart // best_key_distinct
     # benefit test in DISTINCT-pair units (ADVICE r8): fuzzy_pairs is
     # the distinct-name cartesian (O2 scores per distinct pair), so

@@ -312,40 +312,93 @@ def test_promote_exact_mappings_ordering():
     ) == [fz]
 
 
-def test_refine_direct_path_equals_general(spark):
-    """The direct (row-level) refine and the general (distinct +
-    join-back) refine produce identical results — the planner flag
-    only moves cost."""
+@pytest.mark.parametrize(
+    "metric, threshold", [("levenshtein", 80.0), ("jaro_winkler", 94.0)]
+)
+@pytest.mark.parametrize("how", ["inner", "left", "left_semi", "left_anti"])
+def test_refine_matches_equal_python_oracle(
+    spark, monkeypatch, how, metric, threshold
+):
+    """A two-mapping join — names in round 1, then a fuzzy refine round
+    on the (far less unique) nation names — equals a pure-Python scan
+    of the row cartesian with the ``py_kernels`` metrics, in every join
+    mode. The thresholds sit between observed distance values (names:
+    0.333 / 0.389; nations: 0.125 / 0.222 levenshtein, 0.05 / 0.069
+    jaro_winkler), so float rounding cannot move a pair across."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
+    from pl_fuzzy_frame_match_spark.functions.py_kernels import (
+        NORMALIZED_DISTANCE,
+    )
     from pl_fuzzy_frame_match_spark.operators import matcher
 
-    left = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).selectExpr("c_custkey", "c_name", "CAST(c_nationkey AS STRING) c_nk")
-    right = spark.read.parquet(
-        "/root/testdata/sf0.001/supplier.parquet"
-    ).selectExpr("s_suppkey", "s_name", "CAST(s_nationkey AS STRING) s_nk")
+    from .conftest import SF_DIR
+
+    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
+    left = (
+        spark.read.parquet(f"{SF_DIR}/customer.parquet")
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
+        .selectExpr("c_custkey", "c_name", "n_name AS c_nation")
+    )
+    right = (
+        spark.read.parquet(f"{SF_DIR}/supplier.parquet")
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .selectExpr("s_suppkey", "s_name", "n_name AS s_nation")
+    )
     maps = [
-        FuzzyMapping("c_nk", "s_nk", threshold_score=100.0),
-        FuzzyMapping("c_name", "s_name", threshold_score=60.0),
+        FuzzyMapping("c_name", "s_name", threshold_score=65.0),
+        FuzzyMapping(
+            "c_nation", "s_nation", threshold_score=threshold,
+            fuzzy_type=metric,
+        ),
     ]
 
-    def rows(threshold):
-        orig = matcher.REFINE_DIRECT_UNIQUENESS
-        matcher.REFINE_DIRECT_UNIQUENESS = threshold
-        try:
-            out = fuzzy_match_dfs(left, right, maps)
-            return sorted(
-                (r["c_custkey"], r["s_suppkey"],
-                 round(r["c_name_vs_s_name_levenshtein"], 6))
-                for r in out.collect()
-            )
-        finally:
-            matcher.REFINE_DIRECT_UNIQUENESS = orig
+    refined = []
+    refine = matcher.refine_matches
 
-    direct = rows(0.0)   # force direct (always eligible)
-    general = rows(2.0)  # force general (never eligible)
-    assert direct == general and len(direct) > 0
+    def spy(*args, **kwargs):
+        refined.append(args[3].fuzzy_type)
+        return refine(*args, **kwargs)
+
+    monkeypatch.setattr(matcher, "refine_matches", spy)
+    out = fuzzy_match_dfs(left, right, maps, how=how).collect()
+    assert refined == [metric]  # the nation mapping ran as the refine
+
+    name_d = NORMALIZED_DISTANCE["levenshtein"]
+    nation_d = NORMALIZED_DISTANCE[metric]
+    lrows, rrows = left.collect(), right.collect()
+    matches = [
+        (lr["c_custkey"], rr["s_suppkey"], round(1 - dn, 6), round(1 - dc, 6))
+        for lr in lrows
+        for rr in rrows
+        for dn in [name_d(lr["c_name"].lower(), rr["s_name"].lower())]
+        for dc in [nation_d(lr["c_nation"].lower(), rr["s_nation"].lower())]
+        if dn <= maps[0].reversed_threshold_score
+        and dc <= maps[1].reversed_threshold_score
+    ]
+    matched_keys = {m[0] for m in matches}
+    all_keys = {lr["c_custkey"] for lr in lrows}
+    # the refine round must drop some first-round survivors outright
+    assert matches and matched_keys != all_keys
+
+    if how in ("left_semi", "left_anti"):
+        expect = matched_keys if how == "left_semi" else all_keys - matched_keys
+        assert sorted(r["c_custkey"] for r in out) == sorted(expect)
+        return
+    score_cols = [
+        "c_name_vs_s_name_levenshtein", f"c_nation_vs_s_nation_{metric}"
+    ]
+    got = sorted(
+        (
+            r["c_custkey"],
+            r["s_suppkey"],
+            *(None if r[c] is None else round(r[c], 6) for c in score_cols),
+        )
+        for r in out
+    )
+    if how == "left":
+        # unmatched left rows: right columns and scores null
+        matches += [(k, None, None, None) for k in all_keys - matched_keys]
+    assert got == sorted(matches)
 
 
 # ---------------------------------------------------------------------------
@@ -913,44 +966,6 @@ def test_stream_audio_dedup_matches_batch(spark, tmp_path):
     assert len(rows) == len({r["afp"] for r in rows}) == len(batch_fps)
     # groups of 4 re-leveled copies mostly collapse
     assert len(rows) <= 32 - 2 * (32 // 4)
-
-
-def test_refine_direct_equals_general_across_join_modes(spark):
-    """O10 + direct refine must be mode-transparent: left / semi /
-    anti multi-mapping joins return identical rows on both refine
-    paths."""
-    from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
-    from pl_fuzzy_frame_match_spark.operators import matcher
-
-    left = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).selectExpr("c_custkey", "c_name", "CAST(c_nationkey AS STRING) c_nk")
-    right = spark.read.parquet(
-        "/root/testdata/sf0.001/supplier.parquet"
-    ).selectExpr("s_suppkey", "s_name", "CAST(s_nationkey AS STRING) s_nk")
-    maps = [
-        FuzzyMapping("c_nk", "s_nk", threshold_score=100.0),
-        FuzzyMapping("c_name", "s_name", threshold_score=60.0),
-    ]
-
-    for how in ("left", "left_semi", "left_anti"):
-        results = {}
-        for label, bound in (("direct", 0.0), ("general", 2.0)):
-            orig = matcher.REFINE_DIRECT_UNIQUENESS
-            matcher.REFINE_DIRECT_UNIQUENESS = bound
-            try:
-                out = fuzzy_match_dfs(left, right, maps, how=how)
-                results[label] = sorted(
-                    tuple(
-                        round(v, 6) if isinstance(v, float) else v
-                        for v in r
-                    )
-                    for r in out.collect()
-                )
-            finally:
-                matcher.REFINE_DIRECT_UNIQUENESS = orig
-        assert results["direct"] == results["general"], how
-        assert len(results["direct"]) > 0, how
 
 
 def test_resize_images_geometry_and_null_safety(spark):
